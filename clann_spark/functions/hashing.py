@@ -180,6 +180,28 @@ def hamming_sql(a_expr: str, b_expr: str) -> str:
 # ---------------------------------------------------------------------------
 
 
+def segment_reduce(ufunc, vals: np.ndarray, off: np.ndarray, identity) -> np.ndarray:
+    """Per-segment ``ufunc.reduce`` along axis 0: row d of the result
+    reduces ``vals[off[d]:off[d + 1]]``; empty segments get ``identity``.
+
+    ``reduceat`` only reduces over NON-EMPTY starts: an empty segment's
+    start equals the next segment's (or ``len(vals)`` when it is last),
+    and reduceat rejects a start of ``len(vals)`` and returns
+    ``vals[start]`` for a repeated one. Dropping empty starts leaves
+    strictly increasing starts whose next start is exactly the segment
+    end, so every non-empty segment — batch-final included — reduces
+    over all of its values."""
+    vals = vals[: off[-1]]
+    starts = off[:-1]
+    nonempty = off[1:] > starts
+    if nonempty.all():
+        return ufunc.reduceat(vals, starts, axis=0)
+    out = np.full((starts.size,) + vals.shape[1:], identity, dtype=vals.dtype)
+    if nonempty.any():
+        out[nonempty] = ufunc.reduceat(vals, starts[nonempty], axis=0)
+    return out
+
+
 def _md5_minhash_flat(
     sh: np.ndarray, sh_off: np.ndarray, a: np.ndarray, b: np.ndarray, prime: int
 ) -> np.ndarray:
@@ -187,20 +209,9 @@ def _md5_minhash_flat(
     num_perm) int64 signatures. Exactly minhash_sql's fold: per perm i,
     min over h of (a_i*h + b_i) % p; empty docs get the all-prime
     identity. a < 2^31 and h < 2^31 keep a*h+b < 2^62 — no overflow."""
-    n_docs = sh_off.size - 1
-    num_perm = a.size
-    sig = np.empty((n_docs, num_perm), dtype=np.int64)
-    if sh.size:
-        # reduceat raises on start == len (empty trailing segment);
-        # clamp and overwrite via the empty mask below
-        starts = np.minimum(sh_off[:-1], sh.size - 1)
-        for i in range(num_perm):
-            sig[:, i] = np.minimum.reduceat((a[i] * sh + b[i]) % prime, starts)
-        empty = sh_off[1:] == sh_off[:-1]
-        if empty.any():
-            sig[empty] = prime
-    else:
-        sig[:] = prime
+    sig = np.empty((sh_off.size - 1, a.size), dtype=np.int64)
+    for i in range(a.size):
+        sig[:, i] = segment_reduce(np.minimum, (a[i] * sh + b[i]) % prime, sh_off, prime)
     return sig
 
 
@@ -214,13 +225,10 @@ def _md5_simhash_flat(
     view puts hash bit j in column j — no bit permutation, unlike the
     fast path's _simhash_from_words (whose permuted columns define
     their own hash space)."""
-    n_docs = w_off.size - 1
-    if wh.size == 0:
-        return np.zeros(n_docs, dtype=np.int64)
     bits_mat = np.unpackbits(
         wh.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
     ).astype(np.int32)
-    ones = np.add.reduceat(bits_mat, np.minimum(w_off[:-1], wh.size - 1), axis=0)
+    ones = segment_reduce(np.add, bits_mat, w_off, 0)
     counts = (w_off[1:] - w_off[:-1])[:, None]
     bitvec = (2 * ones.astype(np.int64) >= counts) & (counts > 0)
     return (bitvec[:, :bits].astype(np.int64) << np.arange(bits)).sum(axis=1)
@@ -472,21 +480,14 @@ def _minhash_from_folds(
     """(flat uint64 shingle folds, doc offsets) -> (n_docs, num_perm)
     int64 signatures. Multiply-bijection + np.minimum.reduceat, >>33 so
     values stay 31-bit (schema parity with the oracle path)."""
-    n_docs = sh_off.size - 1
-    num_perm = mults.size
-    sig = np.empty((n_docs, num_perm), dtype=np.uint64)
-    if sh.size:
-        # reduceat raises on a start index == len(vals) (an empty
-        # trailing segment); clamp and overwrite via the mask below
-        starts = np.minimum(sh_off[:-1], sh.size - 1)
-        for i in range(num_perm):
-            sig[:, i] = np.minimum.reduceat(sh * mults[i], starts)
-        sig >>= np.uint64(33)
-        empty = sh_off[1:] == sh_off[:-1]
-        if empty.any():
-            sig[empty] = np.uint64(prime)
-    else:
-        sig[:] = np.uint64(prime)
+    sig = np.empty((sh_off.size - 1, mults.size), dtype=np.uint64)
+    # the >>33 is monotone, so it commutes with the min and runs once on
+    # the (n_docs, num_perm) result; empty docs get prime << 33, i.e.
+    # prime after the shift
+    empty = np.uint64(prime) << np.uint64(33)
+    for i in range(mults.size):
+        sig[:, i] = segment_reduce(np.minimum, sh * mults[i], sh_off, empty)
+    sig >>= np.uint64(33)
     return sig.astype(np.int64)
 
 
@@ -497,19 +498,13 @@ def _simhash_from_words(wh_u: np.ndarray, w_off: np.ndarray) -> np.ndarray:
     unpackbits on the little-endian byte view: bit j of the hash is
     column 8*(j//8) + (7 - j%8) — a fixed permutation of columns, i.e.
     still 64 independent LSH bits (we take 60)."""
-    n_docs = w_off.size - 1
-    simhash = np.zeros(n_docs, dtype=np.int64)
-    if wh_u.size:
-        bits = np.unpackbits(wh_u.view(np.uint8).reshape(-1, 8), axis=1).astype(
-            np.int16
-        )
-        ones = np.add.reduceat(bits, np.minimum(w_off[:-1], wh_u.size - 1), axis=0)
-        counts = (w_off[1:] - w_off[:-1])[:, None]
-        bitvec = (2 * ones.astype(np.int64) >= counts) & (counts > 0)
-        simhash = (
-            bitvec[:, :SIMHASH_BITS].astype(np.int64) << np.arange(SIMHASH_BITS)
-        ).sum(axis=1)
-    return simhash
+    bits = np.unpackbits(wh_u.view(np.uint8).reshape(-1, 8), axis=1).astype(np.int16)
+    ones = segment_reduce(np.add, bits, w_off, 0)
+    counts = (w_off[1:] - w_off[:-1])[:, None]
+    bitvec = (2 * ones.astype(np.int64) >= counts) & (counts > 0)
+    return (bitvec[:, :SIMHASH_BITS].astype(np.int64) << np.arange(SIMHASH_BITS)).sum(
+        axis=1
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -644,9 +639,9 @@ def fast_signature_arrow(
 
 def fast_shingle_hashes_arrow(cfg: DedupConfig, passthrough: list[str], wh_col: str = "_wh"):
     """mapInArrow twin of fast_shingle_hashes_udf: (passthrough..., _wh)
-    -> (passthrough..., shingle_hashes array<long>). Used by the verify
-    stage to re-derive candidate shingle sets without the pandas
-    boundary."""
+    -> (passthrough..., shingle_hashes array<long>). Used by
+    verify_pairs_from_text to derive candidate docs' shingle sets from
+    text, with the values fast_signature_arrow emits."""
     import pyarrow as pa
 
     prime = cfg.prime

@@ -2,16 +2,21 @@
 
 The analog of the reference's index build hash pass
 (libpuffinn collection.hpp:241-306: sketches + per-row hash codes),
-as one narrow (shuffle-free) projection pipeline. Three interchangeable
-implementations selected by DedupConfig.signature_impl:
+as one narrow (shuffle-free) projection pipeline. Four implementations
+over two hash spaces, selected by DedupConfig.signature_impl:
 
-  expr   : pure Spark SQL expressions (JVM codegen; md5-based, DuckDB-
-           oracle-checkable). Default.
-  pandas : one Arrow-batched pandas UDF (NumPy); identical values.
-  xxhash : JVM xxhash64 instead of md5 (fastest; same structure, not
-           oracle-checkable).
+  expr   : md5 hash space, DuckDB-oracle-checkable. Default. The JVM
+           tokenizes and md5-hashes shingles and words; one mapInArrow
+           kernel folds MinHash, SimHash and the band hashes.
+  pandas : the same md5 values through a pandas UDF that tokenizes and
+           hashes in Python.
+  xxhash : the expr structure over JVM xxhash64 shingle and word
+           hashes (not oracle-checkable).
+  fast   : production. The JVM tokenizes and xxhash64-hashes words;
+           one mapInArrow kernel folds shingles, MinHash, SimHash and
+           bands. Own hash space (HASH_IMPL_VERSION).
 
-All three are narrow: the signature stage never shuffles.
+All four are narrow: the signature stage never shuffles.
 """
 
 from __future__ import annotations
@@ -27,6 +32,17 @@ from clann_spark.functions import text as T
 SIGNATURE_COLS = ("shingle_hashes", "sig", "bands", "simhash")
 
 
+def input_split_bytes(cfg: DedupConfig) -> int:
+    """Per-task byte budget for adaptive_input_split ahead of text
+    hashing. Granularity follows the impl's measured per-byte cost
+    against the OPTIMIZER'S size estimate (which is well below raw text
+    bytes): the vectorized fast path measures ~0.8-1 MB(est)/s per
+    task, the md5-parity impls hash every shingle+word through
+    interpreted transforms at ~0.14 MB(est)/s — split so a task stays
+    ~0.1-0.2 s of hash work."""
+    return (128 << 10) if cfg.signature_impl in ("fast", "xxhash") else (32 << 10)
+
+
 def compute_signatures(
     df: DataFrame,
     cfg: DedupConfig,
@@ -40,11 +56,13 @@ def compute_signatures(
     Keeps every original column (minus ``text_col`` when drop_text).
     Null text is treated as ''.
 
-    include_shingles=False drops the wide shingle-hash array from the
-    output (~2.4 KB/row vs ~270 B/row for bands+simhash): the pipeline
-    re-derives shingle sets for the few candidate docs at verify time
-    instead of carrying them through every shuffle — at 10^12 docs the
-    shingle column alone would be multi-PB of shuffle traffic.
+    include_shingles=True keeps the per-doc distinct 31-bit shingle
+    hashes the kernel computes anyway (~2 KB/row vs ~270 B/row for
+    bands+simhash). run_dedup persists this table and verifies
+    candidate pairs against it, so no document is tokenized twice;
+    explode_bands projects the column away before the bucket exchange,
+    so it never enters a shuffle there. include_shingles=False drops it
+    for callers that never verify from this table.
 
     include_sig=False (fast impl only) additionally drops the raw
     num_perm-lane signature from the OUTPUT (it is folded into band
@@ -72,15 +90,7 @@ def compute_signatures(
     """
     from clann_spark.session import adaptive_input_split
 
-    # granularity follows the impl's measured per-byte cost against
-    # the OPTIMIZER'S size estimate (which is well below raw text
-    # bytes): the vectorized fast path measures ~0.8-1 MB(est)/s
-    # per task, the md5-parity impls hash every shingle+word
-    # through interpreted transforms at ~0.14 MB(est)/s — split so
-    # a task stays ~0.1-0.2 s of hash work
-    df = adaptive_input_split(
-        df, (128 << 10) if cfg.signature_impl in ("fast", "xxhash") else (32 << 10)
-    )
+    df = adaptive_input_split(df, input_split_bytes(cfg))
     if cfg.signature_impl == "fast":
         from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 

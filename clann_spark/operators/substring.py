@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from clann_spark.functions.hashing import segment_reduce
+
 ROLL_BASE = np.int64(257)
 ROLL_MOD = np.int64((1 << 31) - 1)
 
@@ -156,18 +158,7 @@ def batch_winnow_fingerprints(
     # winnow()'s hashes.size <= w branch
     short = np.where((m > 0) & (m <= w))[0]
     if short.size:
-        # reduceat needs ALL consecutive doc starts (a short-docs-only
-        # start list would run each reduction into the next short doc's
-        # start, crossing every doc in between); mid-stream empty
-        # segments yield garbage rows that the `short` selection never
-        # reads. TRAILING empty docs (start == h.size) must be dropped,
-        # not clamped: reduceat rejects out-of-range starts, and a
-        # clamped start would end the previous doc's segment one hash
-        # early, truncating its min. Every short doc has m > 0, so its
-        # index is < L and its segment (the last one runs to the end of
-        # h) is exact.
-        L = int(np.searchsorted(h_off[:-1], h.size))
-        per_doc_min = np.minimum.reduceat(h, h_off[:L])
+        per_doc_min = segment_reduce(np.minimum, h, h_off, 0)
         sel_doc_parts.append(short)
         sel_val_parts.append(per_doc_min[short])
     if not sel_doc_parts:

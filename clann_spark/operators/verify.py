@@ -23,57 +23,98 @@ JACCARD_SQL = (
 )
 
 
+def _candidate_ids(pairs: DataFrame, cfg: DedupConfig):
+    """Persist the pair list and size-gate it: (pairs, small, ids of
+    every doc in a pair). When the pair list fits under
+    cfg.broadcast_limit rows it is broadcast (map-side joins, the common
+    low-dup case); above the limit — a duplicate-heavy corpus at 10^12
+    docs produces billions of candidate pairs that no executor heap
+    could hold — every join runs as a parallel shuffle join. Both plans
+    produce the identical pair set (tests/test_shuffle_path.py forces
+    the shuffle path with limit 0)."""
+    pairs = pairs.persist()
+    small = pairs.count() <= cfg.broadcast_limit
+    ids = (
+        pairs.select(F.col("a").alias("doc_id"))
+        .union(pairs.select(F.col("b").alias("doc_id")))
+        .distinct()
+    )
+    return pairs, small, F.broadcast(ids) if small else ids
+
+
+def _score(
+    pairs: DataFrame,
+    small: bool,
+    sh: DataFrame,
+    cfg: DedupConfig,
+    keep_below_tau: bool,
+    observation,
+) -> DataFrame:
+    """The verify core: join both pair sides to a (doc_id,
+    shingle_hashes [, simhash]) table, drop far pairs on the SimHash
+    prefilter when the table carries fingerprints and the config
+    enables it, score exact Jaccard, keep jaccard >= tau."""
+    threshold = cfg.hamming_threshold
+    has_simhash = "simhash" in sh.columns and threshold is not None
+
+    def side(k: str) -> DataFrame:
+        s = sh.select(
+            F.col("doc_id").alias(k),
+            F.col("shingle_hashes").alias(f"sh_{k}"),
+            *([F.col("simhash").alias(f"sim_{k}")] if has_simhash else []),
+        )
+        # above the gate the joins stay shuffle joins even when a warm
+        # cache reports a small shingle table
+        return s if small else s.hint("merge")
+
+    j = (F.broadcast(pairs) if small else pairs).join(side("a"), "a").join(side("b"), "b")
+    if has_simhash:
+        j = j.where(F.expr("bit_count(sim_a ^ sim_b)") <= threshold)
+    out = j.select("a", "b", F.expr(JACCARD_SQL).alias("jaccard"))
+    if observation is not None:
+        # A8 distance-computation counter (performance.hpp:72-80 analog):
+        # exact similarity evaluations, counted by the plan's own action —
+        # attached BEFORE the tau filter so false candidates are included
+        out = out.observe(
+            observation,
+            F.count(F.lit(1)).alias("comparisons"),
+            F.coalesce(
+                F.sum((F.col("jaccard") >= cfg.tau).cast("long")), F.lit(0)
+            ).alias("pairs_verified"),
+        )
+    if not keep_below_tau:
+        out = out.where(F.col("jaccard") >= cfg.tau)
+    from clann_spark.session import track_cache
+
+    # `pairs` stays persisted for the size-gate count + two joins;
+    # register it so per-micro-batch callers can release the blocks
+    # (session.unpersist_intermediates) instead of leaking executor
+    # storage over a long-running stream.
+    return track_cache(out, pairs)
+
+
 def verify_pairs(
     pairs: DataFrame,
     sig_df: DataFrame,
     cfg: DedupConfig,
     keep_below_tau: bool = False,
-    broadcast_pairs: bool = False,
+    observation=None,
 ) -> DataFrame:
-    """(a, b) candidates -> (a, b, jaccard) verified pairs.
+    """(a, b) candidates -> (a, b, jaccard) verified pairs, scored
+    against a signature table that already holds the shingle sets.
 
-    sig_df must carry doc_id, shingle_hashes and (if the prefilter is
-    enabled) simhash. Joins are plain shuffle hash joins on doc id —
-    candidates are a small fraction of the corpus, so Catalyst/AQE
-    sizes them; at 100 TB these become shuffle joins against the
-    bucketed signature table.
+    sig_df must carry doc_id and shingle_hashes; a simhash column turns
+    on the SimHash prefilter when cfg enables it. The table is
+    semi-joined down to candidate docs before the pair joins, so only
+    their shingle sets reach the joins. run_dedup verifies this way
+    against its persisted signature table: the shingle sets come from
+    the signature pass, so no document is tokenized twice.
     """
-    cols = [F.col("doc_id"), F.col("shingle_hashes")]
-    threshold = cfg.hamming_threshold
-    has_simhash = "simhash" in sig_df.columns and threshold is not None
-    if has_simhash:
-        cols.append(F.col("simhash"))
-    s = sig_df.select(*cols)
-
-    # Broadcasting the (usually tiny) pair list keeps the wide signature
-    # table un-shuffled — the joins become map-side. The caller flips
-    # this on when the candidate count is known to fit (pipeline does).
-    if broadcast_pairs:
-        pairs = F.broadcast(pairs)
-
-    j = (
-        pairs.join(
-            s.select(
-                F.col("doc_id").alias("a"),
-                F.col("shingle_hashes").alias("sh_a"),
-                *([F.col("simhash").alias("sim_a")] if has_simhash else []),
-            ),
-            "a",
-        ).join(
-            s.select(
-                F.col("doc_id").alias("b"),
-                F.col("shingle_hashes").alias("sh_b"),
-                *([F.col("simhash").alias("sim_b")] if has_simhash else []),
-            ),
-            "b",
-        )
+    pairs, small, ids = _candidate_ids(pairs, cfg)
+    cols = ["doc_id", "shingle_hashes"] + (["simhash"] if "simhash" in sig_df.columns else [])
+    return _score(
+        pairs, small, sig_df.select(*cols).join(ids, "doc_id"), cfg, keep_below_tau, observation
     )
-    if has_simhash:
-        j = j.where(F.expr("bit_count(sim_a ^ sim_b)") <= threshold)
-    out = j.select("a", "b", F.expr(JACCARD_SQL).alias("jaccard"))
-    if not keep_below_tau:
-        out = out.where(F.col("jaccard") >= cfg.tau)
-    return out
 
 
 def prefilter_pairs_by_simhash(
@@ -85,7 +126,7 @@ def prefilter_pairs_by_simhash(
 
     The reference always filters; batch analog = a cheap bit_count
     predicate on two slim int64 joins, a semi-join reduction that cuts
-    the verify stage's text re-derivation + set intersection to the
+    the verify stage's shingle joins + set intersection to the
     survivors. Pick `threshold` with planner.hamming_threshold_for so
     the per-pair miss probability is accounted against the recall
     budget (tests assert the flagship pair set is unchanged)."""
@@ -109,98 +150,65 @@ def verify_pairs_from_text(
     keep_below_tau: bool = False,
     observation=None,
 ) -> DataFrame:
-    """Scale-path verification: re-derive shingle sets ONLY for docs that
-    appear in a candidate pair (semi-join reduction), so the corpus never
-    carries the wide shingle column through shuffles.
+    """verify_pairs for callers that hold text but no shingle sets
+    (incremental micro-batches, lsh_text_query, the checkpointed stage
+    pipeline): derive shingle sets ONLY for docs that appear in a
+    candidate pair, in the signature stage's hash space, then score
+    them with the same core.
 
-    docs: (doc_id, text). Join strategy is size-gated: when the pair
-    list fits under cfg.broadcast_limit rows it is broadcast (map-side
-    joins, the common low-dup case); above the limit — a genuinely
-    duplicate-heavy corpus at 10^12 docs produces billions of candidate
-    pairs that no executor heap could hold — every join runs as a
-    parallel shuffle join. Both plans produce the identical pair set
-    (tests/test_dedup_recall.py forces the shuffle path with limit 0).
+    docs: (doc_id, text). The candidate docs are split with
+    adaptive_input_split at the signature stage's per-task budget, and
+    the shingle table is persisted and filled by one job before both
+    pair joins read it — without the eager fill, the
+    two join sides race to build the cold cache concurrently, each at
+    the input's width.
     """
-    pairs = pairs.persist()
-    small = pairs.count() <= cfg.broadcast_limit
-    cand_ids = (
-        pairs.select(F.col("a").alias("doc_id"))
-        .union(pairs.select(F.col("b").alias("doc_id")))
-        .distinct()
-    )
-    cand_docs = docs.join(F.broadcast(cand_ids) if small else cand_ids, "doc_id")
+    from clann_spark.operators.signatures import input_split_bytes
+    from clann_spark.session import adaptive_input_split, track_cache
+
+    pairs, small, ids = _candidate_ids(pairs, cfg)
+    cand_docs = docs.select("doc_id", "text").join(ids, "doc_id")
+    if small:
+        # the broadcast semi-join keeps the input's (possibly single)
+        # split; splitting after it moves only candidate text, not the
+        # corpus. The shuffle join below the gate splits by doc_id.
+        cand_docs = adaptive_input_split(cand_docs, input_split_bytes(cfg))
+    sh = _shingle_table(cand_docs, cfg).persist()
+    sh.count()
+    return track_cache(_score(pairs, small, sh, cfg, keep_below_tau, observation), sh)
+
+
+def _shingle_table(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(doc_id, text) -> (doc_id, shingle_hashes), the same values
+    compute_signatures(include_shingles=True) emits for cfg's impl
+    (tests/test_segment_kernels.py pins the parity)."""
+    from clann_spark.functions import text as T
 
     if cfg.signature_impl == "fast":
         from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-        from clann_spark.functions import text as T
         from clann_spark.functions.hashing import fast_shingle_hashes_arrow
 
-        # JVM tokenize+hash, then fold in numpy — same hash space as
-        # the signature stage (shared _fold_stream core). mapInArrow:
-        # only (doc_id, word hashes) cross the boundary in, and the
-        # ragged shingle arrays come back as raw Arrow buffers.
+        # JVM tokenize+hash, then fold in numpy (shared _fold_stream
+        # core). Only (doc_id, word hashes) cross the boundary in.
         wh = F.expr(T.word_xxhash_sql("coalesce(text, '')", cfg.seed))
-        sh = cand_docs.select("doc_id", wh.alias("_wh")).mapInArrow(
+        return docs.select("doc_id", wh.alias("_wh")).mapInArrow(
             fast_shingle_hashes_arrow(cfg, ["doc_id"]),
             StructType(
                 [
-                    StructField("doc_id", cand_docs.schema["doc_id"].dataType),
+                    StructField("doc_id", docs.schema["doc_id"].dataType),
                     StructField("shingle_hashes", ArrayType(LongType())),
                 ]
             ),
         )
+    from clann_spark.functions import hashing as H
+
+    if cfg.signature_impl == "xxhash":
+        hashes = H.xxhash_shingle_hashes_sql("_shingles", cfg.seed)
     else:
-        from clann_spark.functions import hashing as H
-        from clann_spark.functions import text as T
-
-        if cfg.signature_impl == "xxhash":
-            hashes = H.xxhash_shingle_hashes_sql("_shingles", cfg.seed)
-        else:
-            hashes = H.shingle_hashes_sql("_shingles")
-        sh = (
-            cand_docs.withColumn("_words", F.expr(T.words_sql("coalesce(text, '')")))
-            .withColumn(
-                "_shingles", F.expr(T.shingles_from_words_sql("_words", cfg.shingle_k))
-            )
-            .select("doc_id", F.expr(hashes).alias("shingle_hashes"))
-        )
-
-    # the candidate shingle table feeds BOTH join sides; without a
-    # persist each side recomputes the whole scan+hash+fold subtree
-    # (broadcast joins have no exchange for AQE to reuse — the round-6
-    # stage timeline showed the 64-task shingle stage executing twice
-    # per e2e run). Registered below for caller release.
-    sh = sh.persist()
-    j = (
-        (F.broadcast(pairs) if small else pairs)
-        .join(
-            sh.select(F.col("doc_id").alias("a"), F.col("shingle_hashes").alias("sh_a")),
-            "a",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("b"), F.col("shingle_hashes").alias("sh_b")),
-            "b",
-        )
+        hashes = H.shingle_hashes_sql("_shingles")
+    return (
+        docs.withColumn("_words", F.expr(T.words_sql("coalesce(text, '')")))
+        .withColumn("_shingles", F.expr(T.shingles_from_words_sql("_words", cfg.shingle_k)))
+        .select("doc_id", F.expr(hashes).alias("shingle_hashes"))
     )
-    out = j.select("a", "b", F.expr(JACCARD_SQL).alias("jaccard"))
-    if observation is not None:
-        # A8 distance-computation counter (performance.hpp:72-80 analog):
-        # exact similarity evaluations, counted by the plan's own action —
-        # attached BEFORE the tau filter so false candidates are included
-        out = out.observe(
-            observation,
-            F.count(F.lit(1)).alias("comparisons"),
-            F.coalesce(
-                F.sum((F.col("jaccard") >= cfg.tau).cast("long")), F.lit(0)
-            ).alias("pairs_verified"),
-        )
-    if not keep_below_tau:
-        out = out.where(F.col("jaccard") >= cfg.tau)
-    from clann_spark.session import track_cache
-
-    # `pairs` stays persisted for the size-gate count + two joins and
-    # `sh` for its two join sides; register both so per-micro-batch
-    # callers can release the blocks (session.unpersist_intermediates)
-    # instead of leaking executor storage over a long-running stream.
-    return track_cache(out, pairs, sh)

@@ -19,7 +19,7 @@ from clann_spark.config import DedupConfig
 from clann_spark.operators.candidates import candidate_pairs
 from clann_spark.operators.connected_components import connected_components
 from clann_spark.operators.signatures import compute_signatures, explode_bands
-from clann_spark.operators.verify import verify_pairs_from_text
+from clann_spark.operators.verify import verify_pairs
 
 
 def prepare_pages(pages: DataFrame, use_html: bool = False) -> DataFrame:
@@ -43,7 +43,7 @@ def prepare_pages(pages: DataFrame, use_html: bool = False) -> DataFrame:
 
 @dataclass
 class DedupResult:
-    signatures: DataFrame      # doc_id, shingle_hashes, sig, bands, simhash
+    signatures: DataFrame      # doc_id, shingle_hashes, [sig,] bands, simhash
     buckets: DataFrame         # doc_id, band_id, band_hash [, simhash
                                #   when the hamming prefilter is on —
                                #   the J7 fingerprint rides the bucket
@@ -60,10 +60,10 @@ class DedupResult:
 
     def unpersist(self) -> None:
         """Release every cache run_dedup registered: the persisted
-        signatures/candidates/verified stages plus any intermediates
-        tracked on them (the verify stage persists the candidate pair
-        list and the candidate-doc shingle table; auto-mode pair
-        generation is a single fused pass since round 6 and registers
+        signatures (which verify reads the shingle sets from),
+        candidates and verified stages, plus any intermediates tracked
+        on them (the verify stage persists the candidate pair list;
+        auto-mode pair generation is a single fused pass and registers
         nothing). Long-lived sessions running many pipelines MUST call
         this after consuming the results, or executor storage grows per
         call. Safe to call repeatedly; the plans stay valid (blocks
@@ -85,40 +85,27 @@ def run_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     pair_mode: str = "clique",
-    persist_signatures: bool = False,
 ) -> DedupResult:
     """Full pipeline over any DataFrame with (id_col, text_col).
 
-    persist_signatures defaults to False since round 6: nothing inside
-    the pipeline reads the signature table twice (verification
-    re-derives shingles from text; auto-mode pair generation is one
-    fused pass), and a persisted-but-single-consumer cache split the
-    signature compute and the bucket-exchange write into two full
-    passes over the corpus (the InMemoryRelation boundary has its own
-    result stage). Callers that will re-read result.signatures can opt
-    back in.
+    Tokenize once: the signature pass also emits each doc's shingle
+    set, and the signature table is persisted because two stages read
+    it. The bucket explode projects the shingle sets away before the
+    bucket exchange; verify semi-joins the table down to candidate docs
+    and scores pairs from it (the reference likewise re-scores LSH
+    survivors against the points its index holds, collection.hpp:
+    909-920), so no document is read or tokenized a second time.
     """
-    base0 = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    base = base0
-    # No blanket repartition here since round 6: compute_signatures
-    # carries its own SIZE-adaptive under-split guard (per-impl task
-    # granularity — see session.adaptive_input_split), so
-    # a small local corpus keeps its natural partitioning (the old
-    # unconditional repartition(2x parallelism) made every downstream
-    # stage a 64-task storm over kilobytes) while a big under-split
-    # input still fans out. The verify stage's candidate-doc scan
-    # inherits the input's own splits.
-    # slim signatures: bands + simhash only (~270 B/row); shingle sets
-    # are re-derived for candidate docs at verify time. drop_text=True
-    # projects text away BEFORE the Arrow stage so the document bytes
-    # never cross the Python boundary.
-    sigs = compute_signatures(
-        base, cfg, include_shingles=False, include_sig=False, drop_text=True
-    )
-    if persist_signatures:
-        sigs = sigs.persist()
+    base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    # No blanket repartition here: compute_signatures carries its own
+    # SIZE-adaptive under-split guard (per-impl task granularity — see
+    # session.adaptive_input_split), so a small local corpus keeps its
+    # natural partitioning while a big under-split input still fans
+    # out. drop_text=True projects text away BEFORE the Arrow stage so
+    # the document bytes never cross the Python boundary.
+    sigs = compute_signatures(base, cfg, include_sig=False, drop_text=True).persist()
 
-    # The bucket explode from the persisted slim signatures is a
+    # The bucket explode from the persisted signatures is a
     # trivial narrow op, and the round-5 candidate stage reads it (and
     # its exchange) exactly ONCE — pair generation is join-free, so no
     # consumer re-executes the explode (candidates.py module
@@ -141,7 +128,11 @@ def run_dedup(
         sketch_col="simhash" if threshold is not None else None,
         hamming_threshold=threshold,
     ).persist()
-    verified = verify_pairs_from_text(cands, base, cfg).persist()
+    # the pair list fills the signature cache (its count is the first
+    # action over it), so verify's two join sides read a warm cache
+    verified = verify_pairs(
+        cands, sigs.select("doc_id", "shingle_hashes"), cfg
+    ).persist()
     clusters = connected_components(verified)
 
     assignments = (
@@ -159,7 +150,7 @@ def run_dedup(
         verified=verified,
         clusters=clusters,
         assignments=assignments,
-        base=base0,
+        base=base,
     )
 
 

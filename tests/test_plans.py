@@ -6,6 +6,8 @@ production surprise."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from clann_spark.config import DedupConfig
@@ -102,6 +104,14 @@ def test_candidates_stage_is_one_exchange(spark, sf_dir):
     for ln in pplan.splitlines():
         if "Exchange hashpartitioning" in ln and "salt" in ln:
             raise AssertionError(f"redundant salted re-shuffle: {ln}")
+    # the bucket exchange carries an explicit partition count (sized to
+    # the bucket table, at most the session's), so AQE cannot coalesce
+    # pair generation down to one task
+    bucket = re.findall(r"hashpartitioning\(band_hash#\d+L, (\d+)\), (\w+)", pplan)
+    assert len(bucket) == 1, pplan
+    n, kind = bucket[0]
+    assert kind == "REPARTITION_BY_NUM", bucket
+    assert 2 <= int(n) <= int(spark.conf.get("spark.sql.shuffle.partitions")), bucket
 
 
 def test_candidates_auto_mode_runs_bucket_exchange_once(spark, sf_dir):
@@ -186,3 +196,53 @@ def test_shuffle_path_has_no_broadcast_of_pairs(spark):
     # sides at runtime, but the static plan must come from the shuffle
     # family for the gated joins)
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+
+
+def _own_nodes(plan) -> list:
+    """Physical nodes of `plan`, not descending into the plans of the
+    cached relations it scans."""
+    nodes, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        nodes.append(node)
+        name = node.nodeName()
+        if name == "InMemoryTableScan":
+            continue
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        else:
+            it = node.children().iterator()
+            while it.hasNext():
+                stack.append(it.next())
+    return nodes
+
+
+@pytest.mark.parametrize("limit", [None, 0], ids=["broadcast", "shuffle"])
+def test_run_dedup_verify_reads_cached_signatures_only(spark, limit):
+    """Tokenize once: run_dedup's verify plan reads the cached pair list
+    and the cached signature table, and nothing else — no scan of the
+    text, no Python (MapInArrow) outside the cached signature relation."""
+    from clann_spark.pipeline import prepare_pages, run_dedup
+    from clann_spark.sources.pages import make_pages, pages_to_spark
+
+    cfg = CFG if limit is None else CFG.with_(broadcast_limit=limit)
+    pages, _ = pages_to_spark(spark, make_pages(n_base=40, seed=5))
+    res = run_dedup(prepare_pages(pages), cfg)
+    top = _own_nodes(res.verified._jdf.queryExecution().executedPlan())
+    (scan,) = [n for n in top if n.nodeName() == "InMemoryTableScan"]
+    nodes = _own_nodes(scan.relation().cachedPlan())
+    names = [n.nodeName() for n in nodes]
+    assert not [x for x in names if "Python" in x or "Arrow" in x], names
+    assert {x for x in names if "Scan" in x} == {"InMemoryTableScan"}, names
+
+    def cols(node) -> frozenset:
+        out = node.relation().output()
+        return frozenset(out.apply(i).name() for i in range(out.size()))
+
+    # the caches read are the candidate pairs and run_dedup's own
+    # signature table, not a second shingle table built from text
+    read = {cols(n) for n in nodes if n.nodeName() == "InMemoryTableScan"}
+    assert read == {frozenset({"a", "b"}), frozenset(res.signatures.columns)}, read
+    res.unpersist()

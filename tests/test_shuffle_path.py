@@ -14,6 +14,7 @@ from clann_spark.config import DedupConfig
 from clann_spark.operators.signatures import compute_signatures
 from clann_spark.operators.simhash_dedup import simhash_near_pairs
 from clann_spark.operators.substring import substring_pairs
+from clann_spark.operators.verify import verify_pairs_from_text
 from clann_spark.pipeline import prepare_pages, run_dedup
 from clann_spark.sources.pages import make_pages, pages_to_spark
 
@@ -36,6 +37,20 @@ def test_dedup_pipeline_shuffle_equals_broadcast(spark, docs):
     shuffle = _pairset(run_dedup(docs, CFG_SHUFFLE).verified)
     assert len(broadcast) > 0
     assert shuffle == broadcast
+
+
+@pytest.mark.parametrize("cfg", [CFG_BCAST, CFG_SHUFFLE], ids=["broadcast", "shuffle"])
+def test_run_dedup_verified_equals_text_verify(spark, docs, cfg):
+    """run_dedup scores pairs from the signature pass's shingle sets;
+    the (a, b, jaccard) set is exactly what verifying the same
+    candidates from text gives, on both join plans."""
+    res = run_dedup(docs, cfg)
+    got = {tuple(r) for r in res.verified.collect()}
+    from_text = verify_pairs_from_text(res.candidates, docs, cfg)
+    want = {tuple(r) for r in from_text.collect()}
+    assert len(got) > 0
+    assert got == want
+    res.unpersist()
 
 
 def test_substring_shuffle_equals_broadcast(spark, docs):

@@ -94,6 +94,8 @@ def _verified_pairs_df(spark, sf_dir) -> DataFrame:
         docs = _docs(spark, sf_dir).select("doc_id", "text")
         sigs = compute_signatures(docs, CFG, drop_text=True).persist()
         cands = candidate_pairs(explode_bands(sigs, CFG), CFG, mode="clique")
+        # the pair-list cache verify_pairs registers on the result lives
+        # as long as this per-session entry, like the signature cache
         _PAIRS_CACHE[key] = verify_pairs(cands, sigs, CFG).persist()
     return _PAIRS_CACHE[key]
 

@@ -71,7 +71,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from clann_spark.config import DedupConfig
-from clann_spark.session import size_split
 
 
 def bucket_census(bucket_df: DataFrame) -> DataFrame:
@@ -98,8 +97,8 @@ def salted_buckets(
     buckets (cnt=1) can never produce a pair and are dropped — at web
     scale that is the vast majority of bucket rows.
 
-    Physical plan: ONE Exchange (hashpartitioning(band_hash), sized to
-    the bucket table up to spark.sql.shuffle.partitions), then a window
+    Physical plan: ONE Exchange (hashpartitioning(band_hash) into
+    spark.sql.shuffle.partitions partitions), then a window
     count, filter and salt projection — all narrow. The window count
     needs the same in-partition sort the downstream merge join needs
     anyway; measured against the round-3 census+broadcast join-back at
@@ -116,13 +115,9 @@ def salted_buckets(
     # shuffled bytes: the stages after it (census, collapse, pair
     # generators) cost per bucket row and pair, and a coalesced
     # exchange ran the whole pair generation of a 4k-doc corpus as one
-    # task. The count follows the bucket table's estimated size (~128
-    # KB per task, up to spark.sql.shuffle.partitions), so a
-    # micro-batch's few buckets run as one wave instead of a full-width
-    # storm of near-empty tasks. At least 2: one partition would plan
-    # as a SinglePartition exchange instead of hashpartitioning(band_hash).
-    cap = int(bucket_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    part = slim.repartition(max(2, size_split(slim, 128 << 10, cap)), "band_hash")
+    # task.
+    n = int(bucket_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    part = slim.repartition(n, "band_hash")
     w = Window.partitionBy("band_hash")
     b = part.withColumn("cnt", F.count("*").over(w)).where(F.col("cnt") >= 2)
     n_salt = F.ceil(F.col("cnt") / F.lit(cfg.bucket_cap)).cast("int")

@@ -32,17 +32,6 @@ from clann_spark.functions import text as T
 SIGNATURE_COLS = ("shingle_hashes", "sig", "bands", "simhash")
 
 
-def input_split_bytes(cfg: DedupConfig) -> int:
-    """Per-task byte budget for adaptive_input_split ahead of text
-    hashing. Granularity follows the impl's measured per-byte cost
-    against the OPTIMIZER'S size estimate (which is well below raw text
-    bytes): the vectorized fast path measures ~0.8-1 MB(est)/s per
-    task, the md5-parity impls hash every shingle+word through
-    interpreted transforms at ~0.14 MB(est)/s — split so a task stays
-    ~0.1-0.2 s of hash work."""
-    return (128 << 10) if cfg.signature_impl in ("fast", "xxhash") else (32 << 10)
-
-
 def compute_signatures(
     df: DataFrame,
     cfg: DedupConfig,
@@ -90,7 +79,15 @@ def compute_signatures(
     """
     from clann_spark.session import adaptive_input_split
 
-    df = adaptive_input_split(df, input_split_bytes(cfg))
+    # granularity follows the impl's measured per-byte cost against
+    # the OPTIMIZER'S size estimate (which is well below raw text
+    # bytes): the vectorized fast path measures ~0.8-1 MB(est)/s
+    # per task, the md5-parity impls hash every shingle+word
+    # through interpreted transforms at ~0.14 MB(est)/s — split so
+    # a task stays ~0.1-0.2 s of hash work
+    df = adaptive_input_split(
+        df, (128 << 10) if cfg.signature_impl in ("fast", "xxhash") else (32 << 10)
+    )
     if cfg.signature_impl == "fast":
         from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 

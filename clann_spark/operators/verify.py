@@ -109,6 +109,12 @@ def verify_pairs(
     their shingle sets reach the joins. run_dedup verifies this way
     against its persisted signature table: the shingle sets come from
     the signature pass, so no document is tokenized twice.
+
+    Side effects: the pair list is persisted and counted (an eager
+    job) while the plan is built, for the broadcast_limit size gate and
+    the two joins that read it. The cache is registered on the result;
+    callers release it with session.unpersist_intermediates once the
+    result has been consumed (or persisted and filled).
     """
     pairs, small, ids = _candidate_ids(pairs, cfg)
     cols = ["doc_id", "shingle_hashes"] + (["simhash"] if "simhash" in sig_df.columns else [])
@@ -156,23 +162,17 @@ def verify_pairs_from_text(
     candidate pair, in the signature stage's hash space, then score
     them with the same core.
 
-    docs: (doc_id, text). The candidate docs are split with
-    adaptive_input_split at the signature stage's per-task budget, and
-    the shingle table is persisted and filled by one job before both
-    pair joins read it — without the eager fill, the
-    two join sides race to build the cold cache concurrently, each at
-    the input's width.
+    docs: (doc_id, text). The shingle table is persisted and filled by
+    one job before both pair joins read it — without the eager fill,
+    the two join sides race to build the cold cache concurrently. Like
+    verify_pairs, this persists the pair list and runs actions while
+    the plan is built; both caches are registered on the result
+    (session.unpersist_intermediates releases them).
     """
-    from clann_spark.operators.signatures import input_split_bytes
-    from clann_spark.session import adaptive_input_split, track_cache
+    from clann_spark.session import track_cache
 
     pairs, small, ids = _candidate_ids(pairs, cfg)
     cand_docs = docs.select("doc_id", "text").join(ids, "doc_id")
-    if small:
-        # the broadcast semi-join keeps the input's (possibly single)
-        # split; splitting after it moves only candidate text, not the
-        # corpus. The shuffle join below the gate splits by doc_id.
-        cand_docs = adaptive_input_split(cand_docs, input_split_bytes(cfg))
     sh = _shingle_table(cand_docs, cfg).persist()
     sh.count()
     return track_cache(_score(pairs, small, sh, cfg, keep_below_tau, observation), sh)

@@ -41,19 +41,6 @@ def unpersist_intermediates(df) -> None:
     df._clann_cached = []
 
 
-def size_split(df, per_task_bytes: int, cap: int) -> int:
-    """Task count for per-row work over df: clamp(optimizer-estimated
-    bytes / per_task_bytes, 1, cap). per_task_bytes is calibrated per
-    caller against the OPTIMIZER'S estimate (well below raw data bytes)
-    so one task holds ~0.1-0.2 s of that operator's work. Unknown stats
-    count as big (cap)."""
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # defensive: unknown stats -> assume big
-        return cap
-    return min(cap, max(1, -(-size // per_task_bytes)))
-
-
 def adaptive_input_split(df, per_task_bytes: int):
     """Size-adaptive under-split guard for operators that run expensive
     per-row work directly on a scan (guide §2: derive partitioning from
@@ -64,14 +51,26 @@ def adaptive_input_split(df, per_task_bytes: int):
     repartition(2x parallelism) instead makes every downstream stage a
     wide task storm over kilobytes. This splits to
     clamp(optimizer_estimated_bytes / per_task_bytes, current, 2x
-    parallelism) (size_split): small inputs keep their natural
-    partitioning, big under-split ones fan out, well-partitioned
-    cluster-scale scans (partitions >= parallelism) are untouched."""
-    want = df.sparkSession.sparkContext.defaultParallelism
+    parallelism): small inputs keep their natural partitioning, big
+    under-split ones fan out, well-partitioned cluster-scale scans
+    (partitions >= parallelism) are untouched. per_task_bytes is
+    calibrated per caller against the OPTIMIZER'S estimate (well below
+    raw data bytes) so one task holds ~0.1-0.2 s of that operator's
+    work."""
+    spark = df.sparkSession
+    want = spark.sparkContext.defaultParallelism
     cur = df.rdd.getNumPartitions()
     if cur >= want:
         return df
-    target = size_split(df, per_task_bytes, want * 2)
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # defensive: unknown stats -> assume big
+        size = None
+    target = (
+        want * 2
+        if size is None
+        else min(want * 2, max(1, -(-size // per_task_bytes)))
+    )
     return df.repartition(target) if target > cur else df
 
 

@@ -104,14 +104,13 @@ def test_candidates_stage_is_one_exchange(spark, sf_dir):
     for ln in pplan.splitlines():
         if "Exchange hashpartitioning" in ln and "salt" in ln:
             raise AssertionError(f"redundant salted re-shuffle: {ln}")
-    # the bucket exchange carries an explicit partition count (sized to
-    # the bucket table, at most the session's), so AQE cannot coalesce
-    # pair generation down to one task
+    # the bucket exchange carries the session's partition count
+    # explicitly, so AQE cannot coalesce pair generation down to one task
     bucket = re.findall(r"hashpartitioning\(band_hash#\d+L, (\d+)\), (\w+)", pplan)
     assert len(bucket) == 1, pplan
     n, kind = bucket[0]
     assert kind == "REPARTITION_BY_NUM", bucket
-    assert 2 <= int(n) <= int(spark.conf.get("spark.sql.shuffle.partitions")), bucket
+    assert int(n) == int(spark.conf.get("spark.sql.shuffle.partitions")), bucket
 
 
 def test_candidates_auto_mode_runs_bucket_exchange_once(spark, sf_dir):

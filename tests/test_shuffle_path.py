@@ -16,6 +16,7 @@ from clann_spark.operators.simhash_dedup import simhash_near_pairs
 from clann_spark.operators.substring import substring_pairs
 from clann_spark.operators.verify import verify_pairs_from_text
 from clann_spark.pipeline import prepare_pages, run_dedup
+from clann_spark.session import unpersist_intermediates
 from clann_spark.sources.pages import make_pages, pages_to_spark
 
 CFG_BCAST = DedupConfig(signature_impl="fast")
@@ -50,6 +51,7 @@ def test_run_dedup_verified_equals_text_verify(spark, docs, cfg):
     want = {tuple(r) for r in from_text.collect()}
     assert len(got) > 0
     assert got == want
+    unpersist_intermediates(from_text)
     res.unpersist()
 
 
